@@ -26,7 +26,7 @@ case class LargeState(x1: Long, x2: Int, x3: Double,
   *    (one grouping key = one store, like the reference's single
   *    hash-table instance), measured end-to-end through the engine.
   *
-  * Prints ONE JSON line and writes `index_bench_result.json`.
+  * Prints ONE JSON line and writes no file.
   */
 object IndexBench {
 
@@ -190,8 +190,6 @@ object IndexBench {
 
     val json = legs.map { case (k, l) => "\"" + k + "\":" + l.json }
       .mkString("""{"metric":"index_bench","legs":{""", ",", "}}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("index_bench_result.json"), json)
     println(json)
     spark.stop()
   }

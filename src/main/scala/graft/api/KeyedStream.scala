@@ -75,7 +75,8 @@ class KeyedStream[K, T](val stream: Stream[T], val keyFn: T => K)(
     * (value/appender/map — arcon's `ArconState` index layer,
     * `arcon/src/index/mod.rs:33-198`) and native multi-timers, running
     * on `transformWithState` when streaming (indexes become
-    * engine-checkpointed state variables; event-time timers need
+    * engine-checkpointed state variables behind a write-back cache,
+    * see [[TwsIndexState]]; event-time timers need
     * [[Stream.withWatermark]]) or per-key ordered replay with in-memory
     * indexes when bounded. */
   def indexOperator[OUT](op: graft.operators.IndexOperator[K, T, OUT])(
@@ -86,22 +87,29 @@ class KeyedStream[K, T](val stream: Stream[T], val keyFn: T => K)(
       if (ds.isStreaming) {
         val theOp = op
         val proc = new StatefulProcessor[K, T, OUT] {
+          @transient private var st: TwsIndexState = _
           private def ctx(tv: TimerValues): graft.operators.TimerContext =
             new graft.operators.TimerContext {
               def scheduleAt(ts: Long): Unit = getHandle.registerTimer(ts)
               def deleteTimer(ts: Long): Unit = getHandle.deleteTimer(ts)
               def watermark: Long = tv.getCurrentWatermarkInMs()
             }
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            theOp.open(new TwsIndexState(getHandle))
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            st = new TwsIndexState(getHandle)
+            theOp.open(st)
+          }
+          // the indexes are write-back: flush once the call's output is
+          // drained, while the engine still has the grouping key set
+          private def flushed(out: Iterator[OUT]): Iterator[OUT] =
+            out ++ { st.flush(); Iterator.empty }
           override def handleInputRows(key: K, rows: Iterator[T],
               timerValues: TimerValues): Iterator[OUT] = {
             val c = ctx(timerValues)
-            rows.flatMap(r => theOp.handleElement(key, r, timeFn.map(f => f(r)), c))
+            flushed(rows.flatMap(r => theOp.handleElement(key, r, timeFn.map(f => f(r)), c)))
           }
           override def handleExpiredTimer(key: K, timerValues: TimerValues,
               expiredTimerInfo: ExpiredTimerInfo): Iterator[OUT] =
-            theOp.handleTimer(key, expiredTimerInfo.getExpiryTimeInMs(), ctx(timerValues))
+            flushed(theOp.handleTimer(key, expiredTimerInfo.getExpiryTimeInMs(), ctx(timerValues)))
         }
         val timeMode =
           if (stream.watermarked) TimeMode.EventTime() else TimeMode.None()

@@ -258,9 +258,12 @@ object StreamingRun {
     val prevNd = s.conf.getOption(ndKey)
     val prevCk = s.conf.getOption(CkFileKey)
     val prevSm = s.conf.getOption(SessLocalKey)
-    s.conf.set(spKey, drainStatePartitions(s).toString)
-    s.conf.set(CkFileKey, drainChecksum(s))
-    s.conf.set(SessLocalKey, drainSessionLocalMerge(s))
+    // resolve (and validate) every spark.graft.* value before the first
+    // set: a throw past this point would leak the drain's confs
+    val (sp, ck, sm) = (drainStatePartitions(s), drainChecksum(s), drainSessionLocalMerge(s))
+    s.conf.set(spKey, sp.toString)
+    s.conf.set(CkFileKey, ck)
+    s.conf.set(SessLocalKey, sm)
     noDataBatches.foreach(v => s.conf.set(ndKey, v.toString))
     var q: StreamingQuery = null
     try {
@@ -811,14 +814,16 @@ object StreamingRun {
       nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
       dropMod: Int = 89): DataFrame = {
     import java.nio.file.Files
+    // validate the spark.graft.* values before any conf is set or dir made
+    val (sp, ck) = (drainStatePartitions(s), drainChecksum(s))
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
     val outDir = Scratch.dir("graft-latency-out")
     val ckpt = Scratch.dir("graft-latency-ckpt")
     val spKey = "spark.sql.shuffle.partitions"
     val prevSp = s.conf.getOption(spKey)
     val prevCk = s.conf.getOption(CkFileKey)
-    s.conf.set(spKey, drainStatePartitions(s).toString)
-    s.conf.set(CkFileKey, drainChecksum(s))
+    s.conf.set(spKey, sp.toString)
+    s.conf.set(CkFileKey, ck)
     var q: StreamingQuery = null
     // outDir holds per-batch data parquet — it must not survive ANY
     // failure path (drain error, retention breach, empty protocol),
@@ -1112,9 +1117,12 @@ object StreamingRun {
     val prevNd = s.conf.getOption(ndKey)
     val prevCk = s.conf.getOption(CkFileKey)
     val prevSm = s.conf.getOption(SessLocalKey)
-    s.conf.set(spKey, drainStatePartitions(s).toString)
-    s.conf.set(CkFileKey, drainChecksum(s))
-    s.conf.set(SessLocalKey, drainSessionLocalMerge(s))
+    // resolve (and validate) every spark.graft.* value before the first
+    // set: a throw past this point would leak the drain's confs
+    val (sp, ck, sm) = (drainStatePartitions(s), drainChecksum(s), drainSessionLocalMerge(s))
+    s.conf.set(spKey, sp.toString)
+    s.conf.set(CkFileKey, ck)
+    s.conf.set(SessLocalKey, sm)
     noDataBatches.foreach(v => s.conf.set(ndKey, v.toString))
     var q: StreamingQuery = null
     try {

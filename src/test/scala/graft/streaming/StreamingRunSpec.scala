@@ -1044,4 +1044,32 @@ class StreamingRunSpec extends SparkTestBase {
     assert(streaming == batch)
     assert(streaming.nonEmpty)
   }
+
+  test("an invalid spark.graft.* drain setting throws before any session conf is set") {
+    val plan = StreamingRun.eventsStream(spark, sfDir)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    val drains: Seq[(String, () => Any)] = Seq(
+      "drainComplete" -> (() => StreamingRun.drainComplete(spark, plan)),
+      "emissionLatency" -> (() => StreamingRun.emissionLatency(spark, sfDir)),
+      "restore" -> (() => StreamingRun.tumblingDailyWatermarkedRestored(spark, sfDir)))
+    for {
+      key <- Seq("spark.graft.drainCheckpointChecksum", "spark.graft.drainSessionLocalMerge")
+      (name, drain) <- drains
+      if !(name == "emissionLatency" && key.endsWith("SessionLocalMerge")) // not read there
+    } {
+      spark.conf.set(key, "sometimes")
+      // a drain partition count unlike the session's, so a leaked
+      // shuffle-partition setting would show
+      spark.conf.set("spark.graft.drainStatePartitions", "3")
+      try {
+        val before = spark.conf.getAll
+        val e = intercept[IllegalArgumentException](drain())
+        assert(e.getMessage.contains(key), e.getMessage)
+        assert(spark.conf.getAll == before, s"$name leaked confs with an invalid $key")
+      } finally {
+        spark.conf.unset(key)
+        spark.conf.unset("spark.graft.drainStatePartitions")
+      }
+    }
+  }
 }
