@@ -173,9 +173,11 @@ object NativeText {
     * `array_distinct` semantics of the HOF twin), so the result is
     * correct for any input, not just pre-distinct ones. 0.0 when both
     * sides are empty. */
-  def jaccard(a: ArrayData, b: ArrayData): Double = {
-    val aa = a.toLongArray()
-    val bb = b.toLongArray()
+  def jaccard(a: ArrayData, b: ArrayData): Double =
+    jaccard(a.toLongArray(), b.toLongArray())
+
+  /** [[jaccard]] over plain hash arrays. */
+  def jaccard(aa: Array[Long], bb: Array[Long]): Double = {
     val setA = new java.util.HashSet[java.lang.Long](aa.length * 2)
     var i = 0
     while (i < aa.length) { setA.add(aa(i)); i += 1 }
@@ -191,6 +193,39 @@ object NativeText {
     }
     val union = setA.size + onlyB
     if (union == 0) 0.0 else inter.toDouble / union.toDouble
+  }
+
+  /** MinHash signature of a shingle-hash array (`numHashes` affine
+    * hashes mod P, minimum over the shingles) folded into one
+    * polynomial key per band of `numHashes / bands` rows. Callers pass a
+    * non-empty array: an empty one has no signature. */
+  def bandKeys(hs: Array[Long], numHashes: Int, bands: Int): Array[Long] = {
+    val rows = numHashes / bands
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    var x = 0
+    while (x < hs.length) {
+      val h = hs(x)
+      var i = 0
+      while (i < numHashes) {
+        val v = (h * (2L * i + 1L) + (7919L * i + 13L)) % P
+        if (v < mins(i)) mins(i) = v
+        i += 1
+      }
+      x += 1
+    }
+    val keys = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var acc = 0L
+      var r = 0
+      while (r < rows) {
+        acc = (acc * 31L + mins(b * rows + r)) % P
+        r += 1
+      }
+      keys(b) = acc
+      b += 1
+    }
+    keys
   }
 
   /** Shingle hashes boxed for generated code. */
@@ -320,6 +355,7 @@ case class PolyHashExpr(child: Expression) extends UnaryExpression {
   * join; the eval itself is still the native single-pass loop. */
 case class ShingleHashesExpr(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
+  require(k >= 1, "k must be >= 1")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
     NativeText.shingleArray(input.asInstanceOf[UTF8String].toString, k)
@@ -357,38 +393,15 @@ case class AHash61Expr(child: Expression) extends UnaryExpression {
   * same contract as `array_min` over an empty array). */
 case class MinHashBandKeysExpr(child: Expression, k: Int, numHashes: Int, bands: Int)
     extends UnaryExpression with CodegenFallback {
+  require(k >= 1, "k must be >= 1")
+  require(bands >= 1, "bands must be >= 1")
   require(numHashes % bands == 0, "bands must divide numHashes")
-  private val rows = numHashes / bands
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override protected def nullSafeEval(input: Any): Any = {
     val hs = NativeText.shingleHashes(input.asInstanceOf[UTF8String].toString, k)
-    if (hs.isEmpty) return null
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var x = 0
-    while (x < hs.length) {
-      val h = hs(x)
-      var i = 0
-      while (i < numHashes) {
-        val v = (h * (2L * i + 1L) + (7919L * i + 13L)) % NativeText.P
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-      x += 1
-    }
-    val keys = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var acc = 0L
-      var r = 0
-      while (r < rows) {
-        acc = (acc * 31L + mins(b * rows + r)) % NativeText.P
-        r += 1
-      }
-      keys(b) = acc
-      b += 1
-    }
-    new GenericArrayData(keys)
+    if (hs.isEmpty) null
+    else new GenericArrayData(NativeText.bandKeys(hs, numHashes, bands))
   }
   override protected def withNewChildInternal(newChild: Expression): MinHashBandKeysExpr =
     copy(child = newChild)

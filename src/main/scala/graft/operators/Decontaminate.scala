@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.NativeText
 import graft.functions.TextFunctions._
 
 /** Benchmark decontamination: flag training documents whose n-gram
@@ -9,64 +10,67 @@ import graft.functions.TextFunctions._
   * guard against test-set leakage in a training-data pipeline.
   *
   * Plan shape, designed for the 100 TB asymmetry (training corpus huge,
-  * benchmark tiny):
+  * benchmark tiny): the benchmark side is reduced to an index on the
+  * cluster, collected to the driver once per call and broadcast with
+  * `sparkContext.broadcast`; every corpus row then computes its
+  * statistics in ONE named probe over the broadcast value (the
+  * [[bloomClean]] `bloomMightContain` precedent). The returned plan is
+  * scan → project: no Generate, Join or Exchange on the corpus side, and
+  * no second corpus scan to restore unmatched documents. Building the
+  * index runs bench-side jobs EAGERLY, when the call is made (as
+  * [[bloomClean]] does) — the returned DataFrame does not carry the
+  * benchmark plan.
   *
-  *  1. the benchmark side collapses to its DISTINCT shingle hashes —
-  *     thousands of longs, broadcast to every executor;
-  *  2. the training side explodes its shingles and joins the broadcast
-  *     set — a narrow map-side hash probe, NO shuffle of the corpus;
-  *  3. overlap counts aggregate per doc (partial map-side combine), and
-  *     a final left join restores zero-overlap docs.
-  *
-  * The only shuffle is the per-doc count aggregation of MATCHED shingles
-  * — for a clean corpus that is a near-empty exchange. Compare the naive
-  * corpus×benchmark join-on-text, which ships the whole corpus.
+  * Statistics are per corpus ROW: `idCol` is carried through, never
+  * grouped or joined on.
   */
 object Decontaminate {
 
   /** Shingle-overlap report: one row per training doc with its shingle
     * count, the number of shingles also present anywhere in `bench`, and
     * a contamination flag (strictly more than `threshold` of the doc's
-    * shingles overlap). Shingle-less docs are never contaminated.
+    * shingles overlap). Shingle-less docs (null text, fewer than `k`
+    * tokens) are never contaminated.
+    *
+    * The benchmark's distinct shingle hashes are computed on the
+    * cluster, collected as a sorted `Array[Long]` (8 B per distinct
+    * shingle) and broadcast; the `shingleOverlapProbe` UDF computes each
+    * doc's shingles once and binary-searches them. The flag is computed
+    * inside the probe, so a filter on it pushed down to the scan still
+    * runs the probe once per row.
     *
     * @return (idCol, n_shingles, n_overlap, contaminated)
     */
   def shingleOverlap(train: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, k: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    // non-nullable shingle array (null text -> empty array -> 0 shingles,
-    // never contaminated — same contract): otherwise every downstream
-    // reference to n_shingles lets the optimizer infer an
-    // isnotnull(size(shinglehashesexpr(...))) filter that re-runs the
-    // text scan a second time per row
-    val trainSh = train.select(col(idCol),
-      coalesce(shingleHashes(col(textCol), k),
-        array().cast("array<long>")).as("__sh"))
-    // explode_outer everywhere a shingle array feeds a generator:
-    // InferFiltersFromGenerate only fires for non-outer explodes, and on
-    // these it clones the FULL shingle scan into a `size(...)>0 AND
-    // isnotnull(...)` filter under the generate (via predicate pushdown
-    // through the staging projection) — tripling the per-row text-scan
-    // cost. The extra null row an outer explode emits for empty docs is
-    // dropped by the inner equi-join on `h` (null never matches), so the
-    // result is identical. PlanAuditSpec pins the single-eval plan.
+    // explode_outer, not explode: InferFiltersFromGenerate only fires for
+    // non-outer explodes, and on these it clones the FULL shingle scan
+    // into a `size(...) > 0 AND isnotnull(...)` filter under the generate
+    // — a second text scan per row. The null row an outer explode emits
+    // for a shingle-less doc is dropped by the isNotNull filter.
     val benchSh = bench
       .select(explode_outer(shingleHashes(col(textCol), k)).as("h"))
       .filter(col("h").isNotNull)
       .distinct()
-    val overlaps = trainSh
-      .select(col(idCol), explode_outer(col("__sh")).as("h"))
-      .join(broadcast(benchSh), Seq("h"))
-      .groupBy(idCol).agg(count(lit(1)).as("n_overlap"))
-    // threshold compare in exact integer math when possible (0.5 -> 2x)
-    val contaminated =
-      if (threshold == 0.5) col("n_overlap") * 2 > col("n_shingles")
-      else col("n_overlap").cast("double") > col("n_shingles").cast("double") * threshold
-    trainSh
-      .select(col(idCol), size(col("__sh")).cast("long").as("n_shingles"))
-      .join(overlaps, Seq(idCol), "left")
-      .withColumn("n_overlap", coalesce(col("n_overlap"), lit(0L)))
-      .withColumn("contaminated", contaminated)
+      .collect().map(_.getLong(0))
+    java.util.Arrays.sort(benchSh)
+    val benchB = train.sparkSession.sparkContext.broadcast(benchSh)
+    val probe = udf((text: String) => {
+      val sh = if (text == null) Array.emptyLongArray else NativeText.shingleHashes(text, k)
+      val set = benchB.value
+      var n = 0L
+      var i = 0
+      while (i < sh.length) {
+        if (java.util.Arrays.binarySearch(set, sh(i)) >= 0) n += 1
+        i += 1
+      }
+      val ns = sh.length.toLong
+      (ns, n, n.toDouble > ns.toDouble * threshold)
+    }).asNonNullable().withName("shingleOverlapProbe")
+    train.select(col(idCol), probe(col(textCol)).as("__p"))
+      .select(col(idCol), col("__p._1").as("n_shingles"),
+        col("__p._2").as("n_overlap"), col("__p._3").as("contaminated"))
   }
 
   /** Strict decontamination via a Bloom-filter prefilter: return the ids
@@ -133,45 +137,44 @@ object Decontaminate {
     * the crawl still bands with its source (the GPT-3/PaLM-style
     * "fuzzy dedup against the eval set" step).
     *
-    * The 100 TB shape exploits the corpus/benchmark asymmetry harder
-    * than any dedup query can: the BENCHMARK side's exploded band keys
-    * (bands × bench rows, with their shingle arrays riding along)
-    * broadcast, so candidate generation AND Jaccard verification both
-    * happen MAP-SIDE inside the broadcast hash join — the corpus is
-    * never shuffled, not even its band keys. The only exchanges carry
-    * verified-contaminated (doc, bench) pairs — for a clean corpus,
-    * near-empty. The price of verifying inside the band join is that a
-    * pair agreeing in j bands verifies j times (≤ `bands`, exact
-    * duplicates the pair-dedup aggregate then collapses); the
-    * alternative — dedup candidates first — would shuffle every
-    * candidate's shingle array. Per row the corpus runs two single-pass
-    * native expressions (band keys, shingle hashes) and drops nothing
-    * else.
+    * The 100 TB shape exploits the corpus/benchmark asymmetry: the
+    * benchmark's (id, band keys, shingle array) rows are computed on the
+    * cluster, collected, and indexed as (band, key) → bench rows, each
+    * shingle array stored once however many bands point at it. The
+    * `lshOverlapProbe` UDF computes a document's shingles once, derives
+    * its band keys from them, gathers the DISTINCT bench rows sharing
+    * any band, and verifies each once with [[NativeText.jaccard]]. The
+    * corpus is never exploded, shuffled or joined; the flag is computed
+    * inside the probe (see [[shingleOverlap]]).
     *
-    * The broadcast payload is NOT just "the benchmark": each bench
-    * row's full shingle-hash array rides along on EVERY one of its
-    * `bands` exploded band rows, so the broadcast weighs roughly
-    * rows × shingles × 8 B × bands (×8 by default) — a 1 GB benchmark
-    * suite broadcasts ~8 GB and hits the driver/broadcast ceiling long
-    * before the corpus side is the problem. A cheap bench-only count
-    * job estimates that payload up front and fails loudly over
-    * `maxBenchBroadcastBytes` (the [[Dedup.ngramJaccardPairs]]
-    * pair-budget discipline): callers with an oversized suite should
+    * The broadcast payload is the benchmark's shingle arrays once —
+    * roughly rows × shingles × 8 B — plus `bands` keys per row. A
+    * 1 GB-of-shingles suite still hits the driver/broadcast ceiling long
+    * before the corpus side is the problem, so a cheap bench-only count
+    * job runs FIRST and fails loudly over `maxBenchBroadcastBytes` (the
+    * [[Dedup.ngramJaccardPairs]] pair-budget discipline). Its formula
+    * still charges every shingle array once per band (× `bands`) and
+    * 64 B per band row, so it is a conservative upper bound of the
+    * index actually broadcast. Callers with an oversized suite should
     * shard `bench` and union the per-shard results, or reduce
-    * `numHashes`.
+    * `numHashes`. A second bench-side job builds the index; both run
+    * when the call is made.
     *
     * @return (idCol, n_bench_matches, max_jaccard, contaminated) — one
-    *         row per training doc; unmatched docs carry (0, 0.0, false).
+    *         row per training doc; n_bench_matches counts distinct bench
+    *         ids with a verified match, max_jaccard is the best verified
+    *         Jaccard; unmatched docs carry (0, 0.0, false).
     */
   def fuzzyLshOverlap(train: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, k: Int = 3,
       numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5,
       maxBenchBroadcastBytes: Long = 2L * 1024 * 1024 * 1024): DataFrame = {
+    require(bands >= 1, "bands must be >= 1")
     require(numHashes % bands == 0, "bands must divide numHashes")
     if (maxBenchBroadcastBytes < Long.MaxValue) {
       // one column-pruned pass over the SMALL side only; 8 B per shingle
-      // hash, duplicated once per band, + ~64 B per exploded row overhead
+      // hash, duplicated once per band, + ~64 B per band row overhead
       val r = bench.agg(
         count(lit(1)).as("n"),
         coalesce(sum(size(shingleHashes(col(textCol), k))
@@ -186,38 +189,56 @@ object Decontaminate {
             s"budget $maxBenchBroadcastBytes. Shard the benchmark suite " +
             "and union the per-shard results, or reduce numHashes.")
     }
-    val benchSide = bench
-      .select(col(idCol).as("__bid"),
-        minHashBandKeys(col(textCol), k, numHashes, bands).as("__bkeys"),
-        coalesce(shingleHashes(col(textCol), k),
-          array().cast("array<long>")).as("__bsh"))
-      .select(col("__bid"), col("__bsh"),
-        posexplode_outer(col("__bkeys")).as(Seq("__band", "__key")))
-      .filter(col("__key").isNotNull)
-    val trainSide = train
-      .select(col(idCol),
-        minHashBandKeys(col(textCol), k, numHashes, bands).as("__tkeys"),
-        coalesce(shingleHashes(col(textCol), k),
-          array().cast("array<long>")).as("__tsh"))
-      .select(col(idCol), col("__tsh"),
-        posexplode_outer(col("__tkeys")).as(Seq("__band", "__key")))
-      .filter(col("__key").isNotNull)
-    val pairs = trainSide
-      .join(broadcast(benchSide), Seq("__band", "__key"))
-      .select(col(idCol), col("__bid"),
-        jaccardShingles(col("__tsh"), col("__bsh")).as("__j"))
-      .filter(col("__j") >= threshold)
-      .groupBy(col(idCol), col("__bid"))
-      .agg(max(col("__j")).as("__j"))
-    val perDoc = pairs
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bench_matches"),
-        max(col("__j")).as("max_jaccard"))
-    train.select(col(idCol))
-      .join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bench_matches"), lit(0L)).as("n_bench_matches"),
-        coalesce(col("max_jaccard"), lit(0.0)).as("max_jaccard"),
-        (coalesce(col("n_bench_matches"), lit(0L)) > 0L).as("contaminated"))
+    // shingle-less bench rows (null keys) can never band-match
+    val rows = bench
+      .select(col(idCol), minHashBandKeys(col(textCol), k, numHashes, bands),
+        shingleHashes(col(textCol), k))
+      .collect().filter(!_.isNullAt(1))
+    val ordOf = rows.map(_.get(0)).distinct.zipWithIndex.toMap
+    val index = new LshIndex(
+      rows.map(_.getSeq[Long](2).toArray),
+      rows.map(r => ordOf(r.get(0))),
+      rows.indices
+        .flatMap(i => rows(i).getSeq[Long](1).zipWithIndex.map { case (key, b) => (b, key) -> i })
+        .groupMap(_._1)(_._2).map { case (bk, is) => bk -> is.toArray })
+    val indexB = train.sparkSession.sparkContext.broadcast(index)
+    val probe = udf((text: String) => {
+      val sh = if (text == null) Array.emptyLongArray else NativeText.shingleHashes(text, k)
+      val (n, maxJ) =
+        if (sh.isEmpty) (0L, 0.0)
+        else indexB.value.matches(NativeText.bandKeys(sh, numHashes, bands), sh, threshold)
+      (n, maxJ, n > 0L)
+    }).asNonNullable().withName("lshOverlapProbe")
+    train.select(col(idCol), probe(col(textCol)).as("__p"))
+      .select(col(idCol), col("__p._1").as("n_bench_matches"),
+        col("__p._2").as("max_jaccard"), col("__p._3").as("contaminated"))
+  }
+
+  /** The broadcast benchmark side of [[fuzzyLshOverlap]]: per bench row
+    * its shingle array and the ordinal of its id among the distinct
+    * bench ids; `buckets` maps (band, key) to the rows carrying it. */
+  private final class LshIndex(shingles: Array[Array[Long]], idOrd: Array[Int],
+      buckets: Map[(Int, Long), Array[Int]]) extends Serializable {
+
+    /** (distinct bench ids whose row shares a band with the doc and has
+      * Jaccard ≥ threshold, the largest such Jaccard; 0.0 if none). */
+    def matches(keys: Array[Long], sh: Array[Long], threshold: Double): (Long, Double) = {
+      val candidates = scala.collection.mutable.HashSet.empty[Int]
+      var b = 0
+      while (b < keys.length) {
+        buckets.get((b, keys(b))).foreach(candidates ++= _)
+        b += 1
+      }
+      val ids = scala.collection.mutable.HashSet.empty[Int]
+      var maxJ = 0.0
+      candidates.foreach { i =>
+        val j = NativeText.jaccard(sh, shingles(i))
+        if (j >= threshold) {
+          ids += idOrd(i)
+          if (j > maxJ) maxJ = j
+        }
+      }
+      (ids.size.toLong, maxJ)
+    }
   }
 }

@@ -761,7 +761,8 @@ object TrainingDataQueries extends QueryModule {
 
     // Benchmark decontamination: docs with doc_id % 97 == 0 stand in for
     // the held-out benchmark; every other doc is scored for 3-shingle
-    // overlap against the broadcast benchmark shingle set.
+    // overlap against the broadcast benchmark shingle set, one probe per
+    // doc.
     "x7_decontaminate" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       Decontaminate.shingleOverlap(
@@ -781,9 +782,9 @@ object TrainingDataQueries extends QueryModule {
     // FUZZY decontamination: the benchmark stand-ins are 80%-prefix
     // TRUNCATIONS of every 97th doc (near- but not exact copies — what
     // x7's exact shingle matching is blind to when paraphrase shifts
-    // most shingles). MinHash-LSH candidates verify by exact Jaccard
-    // map-side inside the broadcast band join; the corpus never
-    // shuffles.
+    // most shingles). Each doc probes the broadcast benchmark band index
+    // and verifies its distinct candidates by exact Jaccard; the corpus
+    // is never exploded, joined or shuffled.
     "x17_fuzzy_decontaminate" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val bench = prefixTruncated(docs, mod = 97, idOffset = 2000000L)
@@ -859,9 +860,9 @@ object TrainingDataQueries extends QueryModule {
     // smallest doc id) → benchmark decontamination → deterministic
     // split, reported as per-(lang, split) counts. Every stage is one of
     // this library's operators; Catalyst fuses the narrow stages into
-    // shared scans, and the wide edges are exactly: one groupBy for the
-    // dedup, one broadcast-probe + count agg for decontamination, one
-    // final count agg — the 100 TB shape.
+    // shared scans, and the wide edges are the dedup groupBy, the doc-id
+    // joins and one final count agg; decontamination itself is a per-row
+    // broadcast probe with no edge of its own — the 100 TB shape.
     "pl1_pipeline" -> ((s, d) => {
       val norm = trim(regexp_replace(
         regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))

@@ -130,11 +130,102 @@ class DecontaminateSpec extends SparkTestBase {
       .select((col("doc_id") + 2000000).as("doc_id"), col("text"))
     val p = Decontaminate.fuzzyLshOverlap(train, bench, "doc_id", "text")
       .queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), p)
-    // no exchange may carry a shingle array or a band key — the only
-    // shuffles key on verified (doc, bench) pairs / doc ids
-    val shuffles = p.linesIterator.filter(_.contains("Exchange hashpartitioning"))
-    assert(shuffles.forall(l => !l.contains("__tsh#") && !l.contains("__bsh#")
-      && !l.contains("__key#")), p)
+    // band keys, shingle arrays and candidate pairs never become rows:
+    // the benchmark index is a broadcast value the probe reads per doc
+    assert(p.linesIterator.count(_.contains("lshOverlapProbe(")) == 1, p)
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("Generate"), p)
+    assert(!p.contains("Join"), p)
+  }
+
+  test("bad shingle and banding parameters fail with IllegalArgumentException") {
+    import graft.functions.{MinHashBandKeysExpr, ShingleHashesExpr}
+    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val text = org.apache.spark.sql.catalyst.expressions.Literal("a b c d")
+    val bad: Seq[(String, () => Any)] = Seq(
+      "ShingleHashesExpr k=0" -> (() => ShingleHashesExpr(text, 0)),
+      "ShingleHashesExpr k=-1" -> (() => ShingleHashesExpr(text, -1)),
+      "MinHashBandKeysExpr k=0" -> (() => MinHashBandKeysExpr(text, 0, 32, 8)),
+      "MinHashBandKeysExpr bands=0" -> (() => MinHashBandKeysExpr(text, 3, 32, 0)),
+      "MinHashBandKeysExpr bands=-4" -> (() => MinHashBandKeysExpr(text, 3, 32, -4)),
+      "shingleOverlap k=0" ->
+        (() => Decontaminate.shingleOverlap(docs, docs, "doc_id", "text", k = 0)),
+      "fuzzyLshOverlap k=0" ->
+        (() => Decontaminate.fuzzyLshOverlap(docs, docs, "doc_id", "text", k = 0)),
+      "fuzzyLshOverlap bands=0" ->
+        (() => Decontaminate.fuzzyLshOverlap(docs, docs, "doc_id", "text", bands = 0)))
+    for ((name, f) <- bad)
+      withClue(name)(intercept[IllegalArgumentException](f()))
+  }
+
+  test("the broadcast probes equal the explode/join reference formulations on generated corpora (property)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    // words long enough that shingle hashes wrap mod P under the MinHash
+    // affine maps: with one-letter words every hash function keeps the
+    // same minimum and the bands agree all or nothing
+    val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot")
+    val genWords: Gen[String] = Gen.choose(0, 16)
+      .flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab))).map(_.mkString(" "))
+    // null, empty and short (< k token) texts; a six-word vocabulary
+    // repeats shingles inside and across docs
+    val genText: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String), 1 -> Gen.const(""), 8 -> genWords)
+    // a benchmark item near a corpus doc: a prefix of it, one to three
+    // tokens replaced (partial band agreement), or the doc verbatim
+    def near(t: String): Gen[String] =
+      if (t == null) Gen.const(null: String)
+      else {
+        val ws = t.split(" ", -1)
+        val replace = Gen.listOfN(3, Gen.zip(Gen.choose(0, ws.length - 1), Gen.oneOf(vocab)))
+        Gen.oneOf(
+          Gen.choose(0, ws.length).map(n => ws.take(n).mkString(" ")),
+          Gen.choose(1, 3).flatMap(n => replace.map(_.take(n).foldLeft(ws) {
+            case (acc, (i, w)) => acc.updated(i, w)
+          }.mkString(" "))),
+          Gen.const(t))
+      }
+    val genCase = for {
+      train <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, genText))
+      nBench <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 6))
+      bench0 <- Gen.listOfN(nBench, Gen.frequency(
+        3 -> Gen.oneOf(train).flatMap(near), 1 -> genText))
+      dupText <- Gen.oneOf(false, true) // repeat a bench text under a new id
+      // bench ids: one per row, shared by consecutive rows, or every row
+      // doubled under its own id (a doc then matches one id twice)
+      idMode <- Gen.frequency(2 -> 0, 1 -> 1, 1 -> 2)
+      k <- Gen.choose(1, 3)
+      threshold <- Gen.oneOf(0.0, 0.25, 0.5, 0.6, 0.75, 1.0)
+      banding <- Gen.oneOf((32, 8), (8, 4), (6, 3), (4, 1))
+    } yield {
+      val texts = if (dupText && bench0.nonEmpty) bench0 :+ bench0.head else bench0
+      val bench = idMode match {
+        case 0 => texts.zipWithIndex.map { case (t, i) => (1000L + i, t) }
+        case 1 => texts.zipWithIndex.map { case (t, i) => (1000L + i / 2, t) }
+        case _ => texts.zipWithIndex.flatMap { case (t, i) => Seq((1000L + i, t), (1000L + i, t)) }
+      }
+      (train, bench, k, threshold, banding._1, banding._2)
+    }
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] =
+      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    // no shrinking: every shrink step reruns four Spark queries; the
+    // failing case is reported as generated
+    val prop = Prop.forAllNoShrink(genCase) { case (trainTexts, benchRows, k, threshold, numHashes, bands) =>
+      val train = trainTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val bench = benchRows.toDF("doc_id", "text")
+      val exact = byId(Decontaminate.shingleOverlap(
+        train, bench, "doc_id", "text", k, threshold))
+      val exactRef = byId(DecontaminateReference.shingleOverlap(
+        train, bench, "doc_id", "text", k, threshold))
+      val fuzzy = byId(Decontaminate.fuzzyLshOverlap(
+        train, bench, "doc_id", "text", k, numHashes, bands, threshold))
+      val fuzzyRef = byId(DecontaminateReference.fuzzyLshOverlap(
+        train, bench, "doc_id", "text", k, numHashes, bands, threshold))
+      (exact == exactRef) :| s"shingleOverlap $exact != $exactRef" &&
+        (fuzzy == fuzzyRef) :| s"fuzzyLshOverlap $fuzzy != $fuzzyRef"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, res.status.toString)
   }
 }

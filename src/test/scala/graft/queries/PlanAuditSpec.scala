@@ -313,10 +313,10 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("x7_decontaminate: benchmark shingle set broadcasts; corpus is never shuffled on text") {
     val p = plan("x7_decontaminate")
-    assert(p.contains("BroadcastHashJoin"), p)
-    // the corpus-side probe must not exchange raw text or shingle arrays
-    val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning"))
-    assert(exchanges.forall(l => !l.contains("text#") && !l.contains("__sh#")), p)
+    // one named per-doc probe over the broadcast set, evaluated once
+    assert(p.linesIterator.count(_.contains("shingleOverlapProbe(")) == 1, p)
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("Generate"), p)
   }
 
   test("sp1_split: hash split assignment is a narrow projection — zero exchanges") {
@@ -345,7 +345,10 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("pl1_pipeline: composed pipeline keeps the decontamination probe a broadcast") {
     val p = plan("pl1_pipeline")
-    assert(p.contains("BroadcastHashJoin"), p)
+    assert(p.linesIterator.count(_.contains("shingleOverlapProbe(")) == 1, p)
+    // no exchange is keyed on the text or a shingle array
+    val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning"))
+    assert(exchanges.forall(l => !l.contains("text#") && !l.contains("__sh#")), p)
   }
 
   test("x9_heavy_hitters: top-k is a bounded per-partition TakeOrdered, never a global sort") {
